@@ -29,6 +29,7 @@ import time
 
 
 def cmd_build(args) -> None:
+    from .pipeline.checkpoints import CheckpointStore
     from .pipeline.runner import KGPipeline
     from .session import get_spark
 
@@ -55,8 +56,15 @@ def cmd_build(args) -> None:
     )
     out["metrics"].write.mode("overwrite").parquet(args.output.rstrip("/") + "/metrics")
     counts = {r["pred"]: r["count"] for r in triples.groupBy("pred").count().collect()}
+    # stage-table layout from the manifest: a small-file regression shows
+    # here without opening the JSON
+    layout = {
+        stage: {k: e.get(k) for k in ("files", "bytes")}
+        for stage, e in CheckpointStore(ckpt).manifest.items()
+    }
     print(json.dumps({"status": "ok", "edges_by_pred": counts,
-                      "nodes": out["nodes"].count(), "output": args.output}))
+                      "nodes": out["nodes"].count(), "checkpoints": layout,
+                      "output": args.output}))
 
 
 def cmd_bench(args) -> None:

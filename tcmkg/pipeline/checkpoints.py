@@ -5,12 +5,16 @@ script writes CSVs that the next script re-reads (e.g.
 processed_code/extract_ingredient.py:225-229 write-then-reread;
 merge_tcm_symptom.py:143-172). We reproduce that contract as parquet stage
 tables plus a JSON manifest: a stage whose manifest entry exists AND whose
-parquet is readable is skipped on re-run (kill-and-resume safe, idempotent).
+parquet is readable is skipped on re-run (kill-and-resume safe, idempotent);
+the manifest commits by atomic rename.
 
-On a cluster with Iceberg jars these become Iceberg tables (atomic commits,
-snapshot lineage) — `use_iceberg` switches the writer; the sandbox image has
-no Iceberg runtime, so parquet + atomic manifest rename is the fallback and
-is what the tests exercise.
+Stage tables are internal resume points, so they are written flat: one file
+per task. Hive-partitioning them (by mention kind, by predicate) would
+multiply the files by the number of partition values and make every
+read-back pay a listing job plus one task per small file. Per-relation
+layout belongs to the published sinks (pipeline/export.py). Each manifest
+entry records the written table's data `files` and `bytes`, so a small-file
+regression shows in _MANIFEST.json alone.
 """
 
 from __future__ import annotations
@@ -23,10 +27,18 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 
+def _layout(path: str) -> dict:
+    """Data files and bytes of a written (flat) stage table: a local
+    directory listing, no Spark job. `_SUCCESS` and `.crc` side files are
+    not data."""
+    with os.scandir(path) as it:
+        data = [e for e in it if not e.name.startswith(("_", "."))]
+    return {"files": len(data), "bytes": sum(e.stat().st_size for e in data)}
+
+
 @dataclass
 class CheckpointStore:
     root: str
-    use_iceberg: bool = False
     manifest: dict = field(default_factory=dict)
 
     def __post_init__(self) -> None:
@@ -51,22 +63,16 @@ class CheckpointStore:
     def read(self, spark: SparkSession, stage: str) -> DataFrame:
         return spark.read.parquet(self._stage_path(stage))
 
-    def write(
-        self,
-        df: DataFrame,
-        stage: str,
-        partition_by: list[str] | None = None,
-        meta: dict | None = None,
-    ) -> None:
+    def write(self, df: DataFrame, stage: str, meta: dict | None = None) -> None:
         """`meta`: JSON-able facts about HOW the stage table was built
         (e.g. the minhash banding of a signature index) — recorded in the
         manifest entry so readers can validate compatibility instead of
         silently consuming an index built under different parameters."""
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self._stage_path(stage))
-        self.manifest[stage] = {"completed_at": time.time(), **(meta or {})}
+        path = self._stage_path(stage)
+        df.write.mode("overwrite").parquet(path)
+        self.manifest[stage] = {
+            "completed_at": time.time(), **_layout(path), **(meta or {})
+        }
         tmp = self._manifest_path() + ".tmp"
         with open(tmp, "w") as f:
             json.dump(self.manifest, f, indent=2)
@@ -77,7 +83,6 @@ class CheckpointStore:
         spark: SparkSession,
         stage: str,
         compute,
-        partition_by: list[str] | None = None,
         expect_cols: list[str] | None = None,
     ) -> DataFrame:
         """Compute-or-resume: returns the stage DataFrame either way.
@@ -91,5 +96,5 @@ class CheckpointStore:
             if not expect_cols or set(expect_cols) <= set(df.columns):
                 return df
         df = compute()
-        self.write(df, stage, partition_by)
+        self.write(df, stage)
         return self.read(spark, stage)

@@ -244,16 +244,11 @@ class KGPipeline:
         mentions = store.run_stage(
             spark, "s1_mentions",
             lambda: self.mentions(transcripts),
-            partition_by=["kind"],
             # schema-evolution guard: a pre-amt_min/amt_max checkpoint must
             # recompute, not resume (metrics reference the new columns)
             expect_cols=["amt_min", "amt_max"],
         )
-        triples = store.run_stage(
-            spark, "s2_triples",
-            lambda: assemble_triples(mentions),
-            partition_by=["pred"],
-        )
+        triples = store.run_stage(spark, "s2_triples", lambda: assemble_triples(mentions))
         nodes = store.run_stage(spark, "s3_nodes", self.nodes_table)
         metrics = store.run_stage(spark, "s4_metrics", lambda: self._metrics(mentions, triples))
         return {"mentions": mentions, "triples": triples, "nodes": nodes, "metrics": metrics}
@@ -468,7 +463,12 @@ class KGPipeline:
         return paths.select(*cols)
 
     def _metrics(self, mentions: DataFrame, triples: DataFrame) -> DataFrame:
-        """Per-partition lineage + triple-count metrics (north-rule item)."""
+        """Per-partition lineage + triple-count metrics (north-rule item).
+
+        `mentions_per_partition` counts mention partials per read split of
+        the s1_mentions stage table, whose files are the kernel's output
+        partitions (one file per task), so its key set follows the kernel
+        partition count and the reader's file packing."""
         m = (
             mentions.withColumn("part", F.spark_partition_id())
             .groupBy("part")

@@ -342,7 +342,8 @@ _PLAIN_KINDS = (
 def _lab(df: DataFrame, pred: str, weight=None) -> DataFrame:
     """Label a pair frame as (subj, pred, obj, weight) — the single
     published-row shape both assembly formulations emit (one definition so
-    the differential-reference path cannot drift from the production one)."""
+    the differential reference in the tests cannot drift from the
+    production one)."""
     w = F.col("weight") if weight else F.lit(None).cast("double")
     return df.select(
         "subj", F.lit(pred).alias("pred"), "obj", w.alias("weight")
@@ -367,73 +368,8 @@ def assemble_triples(mentions: DataFrame) -> DataFrame:
     return _assemble_grouped(reduced)
 
 
-def _assemble_joins(reduced: DataFrame) -> DataFrame:
-    """The r5 arm-union formulation of the predicate algebra: one union
-    arm per weighted/capped/de-conflicted family, each made of anti/semi
-    joins over the deduped pair frame (the helper functions above are the
-    per-family specs, each pinned by its own test). Kept as the
-    DIFFERENTIAL REFERENCE for `_assemble_grouped`, which computes the
-    same 47 families without the joins — test_triples_grouped_matches_
-    joins asserts row-set equality on real extractions."""
-    pairs = reduced.filter(F.col("kind") != "contains").select(
-        "kind", "subj", "obj"
-    )
-
-    pred_map = F.create_map(
-        *[F.lit(x) for k in _PLAIN_KINDS for x in (k, PRED_OF_KIND[k])]
-    )
-    plain = pairs.filter(F.col("kind").isin(*_PLAIN_KINDS)).select(
-        "subj",
-        pred_map[F.col("kind")].alias("pred"),
-        "obj",
-        F.lit(None).cast("double").alias("weight"),
-    )
-
-    parts = [
-        _lab(contains_edges(reduced), PRED_OF_KIND["contains"], weight=True),
-        _lab(p_symptom_edges(pairs), PRED_OF_KIND["p_symptom"]),
-        _lab(treats_edges(pairs), PRED_OF_KIND["treats"]),
-        plain,
-    ]
-    # algebra families: only the FILTERED/derived outputs get arms; their
-    # plain pass-through siblings (bind, gg_reg/gg_cov, dg_up/dg_down)
-    # already shipped in the bulk arm above
-    up_f, down_f, assoc_f, _bind = gene_edges(pairs)
-    it_f, ii_f, ic_f = ingredient_disease_edges(pairs)
-    _gr, _gc, ga_f = gene_gene_edges(pairs)
-    _du, _dd, da_f = disease_gene_edges(pairs)
-    parts += [
-        _lab(up_f, PRED_OF_KIND["up_gene"]),
-        _lab(down_f, PRED_OF_KIND["down_gene"]),
-        _lab(assoc_f, PRED_OF_KIND["assoc_gene"]),
-        _lab(it_f, PRED_OF_KIND["i_treat"]),
-        _lab(ii_f, PRED_OF_KIND["i_induce"]),
-        _lab(ic_f, PRED_OF_KIND["i_contra"]),
-        _lab(ga_f, PRED_OF_KIND["gg_assoc"]),
-        _lab(da_f, PRED_OF_KIND["dg_assoc"]),
-    ]
-    # is_a feeds both its own predicate and the disease-resemble kill set
-    isa_f = is_a_edges(pairs)
-    parts += [
-        _lab(isa_f, PRED_OF_KIND["is_a"]),
-        _lab(disease_resemble_edges(pairs, isa_f), PRED_OF_KIND["dis_resemble"]),
-        _lab(_collapse_mutual(_pairs(pairs, "ing_resemble")),
-            PRED_OF_KIND["ing_resemble"]),
-        _lab(_collapse_mutual(_pairs(pairs, "ing_interact")),
-            PRED_OF_KIND["ing_interact"]),
-    ]
-    # balanced union tree: analyzer cost grows with tree DEPTH × size, so
-    # pairing arms (depth log n) beats the left-deep chain (depth n)
-    while len(parts) > 1:
-        parts = [
-            parts[i].unionByName(parts[i + 1]) if i + 1 < len(parts) else parts[i]
-            for i in range(0, len(parts), 2)
-        ]
-    return parts[0]
-
-
 # kinds whose published set depends on the REVERSED pair's kinds (swap
-# joins in the arm formulation); the grouped fold tags these kinds'
+# joins in the per-family helpers); the grouped fold tags these kinds'
 # reverse orientation into the same group so the algebra stays row-local
 _REV_KINDS = ("is_a", "gg_reg", "gg_cov", "gg_assoc", "ing_resemble", "ing_interact")
 
@@ -456,8 +392,9 @@ def _assemble_grouped(reduced: DataFrame) -> DataFrame:
     at sf0.1 — 62 jobs/leg measured, nearly all of them this algebra).
     Only contains (per-formula dose totals) and p_symptom (per-subject
     degree cap) keep arms: their rules aggregate across DIFFERENT keys.
-    Equivalence with the join formulation is pinned by a differential
-    test on real extractions and by the per-family DuckDB oracle hashes
+    Equivalence with the join formulation (the per-family helpers above,
+    unioned by the differential spec in tests/test_round5.py) is pinned
+    on real extractions and by the per-family DuckDB oracle hashes
     (kg_all_edges covers all 47 families in one hash). Scale shape: the
     one shuffle moves O(distinct pairs) rows; collect_set fan-in is
     bounded by the kind vocabulary (≤ 2×47), so there are no hot keys.

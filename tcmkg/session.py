@@ -2,10 +2,10 @@
 
 Local mode stands in for a multi-executor cluster; every knob here is the
 one we would also set on a real 1000-executor deployment (AQE, skew join,
-Arrow batching, sane shuffle partitioning). Iceberg jars are not present in
-this sandbox image, so checkpoint tables fall back to parquet-with-manifest
-(see pipeline/checkpoints.py); on a cluster with the iceberg-spark-runtime
-jar, `iceberg=True` configures a hadoop catalog instead.
+Arrow batching, sane shuffle partitioning). Checkpoint tables are
+parquet-with-manifest (see pipeline/checkpoints.py); on a cluster with the
+iceberg-spark-runtime jar, `iceberg=True` configures a hadoop Iceberg
+catalog named `local`.
 """
 
 from __future__ import annotations

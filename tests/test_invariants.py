@@ -51,7 +51,6 @@ def test_checkpoint_resume(tmp_path, spark, pipeline, transcripts_df, golden_tri
     store = CheckpointStore(ckpt)
     store.run_stage(
         spark, "s1_mentions", lambda: pipeline.mentions(transcripts_df),
-        partition_by=["kind"],
     )
     assert store.has("s1_mentions")
 
@@ -67,6 +66,68 @@ def test_checkpoint_resume(tmp_path, spark, pipeline, transcripts_df, golden_tri
     out2 = pipeline.run(transcripts_df, checkpoint_dir=ckpt)
     got2 = {(r.subj, r.pred, r.obj) for r in out2["triples"].collect()}
     assert got2 == got
+
+
+_RUN_STAGES = ("s1_mentions", "s2_triples", "s3_nodes", "s4_metrics")
+
+
+@pytest.fixture(scope="module")
+def checkpointed_run(tmp_path_factory, pipeline, transcripts_df):
+    ckpt = str(tmp_path_factory.mktemp("flat"))
+    return ckpt, pipeline.run(transcripts_df, checkpoint_dir=ckpt)
+
+
+def test_stage_tables_flat(spark, pipeline, transcripts_df, checkpointed_run):
+    """run()'s stage tables are flat resume points: no Hive `key=value`
+    directories, at most one mention file per kernel task, the columns of
+    the unpartitioned frames, and a resumed run returns identical rows."""
+    import os
+
+    ckpt, out = checkpointed_run
+    for stage in _RUN_STAGES:
+        for d, subdirs, _ in os.walk(os.path.join(ckpt, stage)):
+            assert not [x for x in subdirs if "=" in x], (stage, d, subdirs)
+    files = [f for f in os.listdir(os.path.join(ckpt, "s1_mentions"))
+             if f.endswith(".parquet")]
+    assert 0 < len(files) <= 2 * spark.sparkContext.defaultParallelism
+    assert set(out["mentions"].columns) == set(pipeline.mentions(transcripts_df).columns)
+    assert set(out["triples"].columns) == {"subj", "pred", "obj", "weight"}
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select("subj", "pred", "obj", "weight").collect())
+
+    again = pipeline.run(transcripts_df, checkpoint_dir=ckpt)
+    assert rows(again["triples"]) == rows(out["triples"])
+
+
+def test_manifest_records_stage_layout(checkpointed_run):
+    """Every run() stage's manifest entry records the written table's data
+    files and bytes, so a small-file regression shows in the manifest."""
+    import json
+    import os
+
+    ckpt, _ = checkpointed_run
+    with open(os.path.join(ckpt, "_MANIFEST.json")) as f:
+        manifest = json.load(f)
+    for stage in _RUN_STAGES:
+        assert manifest[stage]["files"] > 0, stage
+        assert manifest[stage]["bytes"] > 0, stage
+
+
+def test_cli_build_prints_stage_layout(tmp_path, capsys, transcripts_df, checkpointed_run):
+    """`python -m tcmkg build` reports each checkpoint stage's files/bytes
+    from the manifest (here resuming every stage of an existing run)."""
+    import json
+
+    from tcmkg.__main__ import main
+
+    ckpt, _ = checkpointed_run
+    src = str(tmp_path / "in")
+    transcripts_df.write.parquet(src)
+    main(["build", "--input", src, "--output", str(tmp_path / "out"), "--checkpoint", ckpt])
+    status = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert set(status["checkpoints"]) == set(_RUN_STAGES)
+    assert all(e["files"] > 0 and e["bytes"] > 0 for e in status["checkpoints"].values())
 
 
 def test_metrics_table(tmp_path, spark, pipeline, transcripts_df):
@@ -148,7 +209,6 @@ def test_checkpoint_recovers_from_torn_write(tmp_path, spark, pipeline, transcri
     store = CheckpointStore(ckpt)
     store.run_stage(
         spark, "s1_mentions", lambda: pipeline.mentions(transcripts_df),
-        partition_by=["kind"],
     )
     n_before = store.read(spark, "s1_mentions").count()
     # simulate the torn write: data dir half-gone, manifest still claims done
@@ -159,7 +219,6 @@ def test_checkpoint_recovers_from_torn_write(tmp_path, spark, pipeline, transcri
     shutil.rmtree(os.path.join(ckpt, "s1_mentions"))
     df = store2.run_stage(
         spark, "s1_mentions", lambda: pipeline.mentions(transcripts_df),
-        partition_by=["kind"],
     )
     assert df.count() == n_before
 

@@ -793,6 +793,89 @@ def test_k_hop_pred_filters(spark, pipeline, transcripts_df):
     assert got == want and got
 
 
+def _assemble_joins(reduced):
+    """The r5 arm-union formulation of the predicate algebra: one union
+    arm per weighted/capped/de-conflicted family, each made of anti/semi
+    joins over the deduped pair frame (the per-family helpers in
+    pipeline/triples.py are the specs, each pinned by its own test). The
+    DIFFERENTIAL SPEC for `_assemble_grouped`, which computes the same 47
+    families without the joins."""
+    from pyspark.sql import functions as F
+
+    from tcmkg.pipeline.triples import (
+        _PLAIN_KINDS,
+        PRED_OF_KIND,
+        _collapse_mutual,
+        _lab,
+        _pairs,
+        contains_edges,
+        disease_gene_edges,
+        disease_resemble_edges,
+        gene_edges,
+        gene_gene_edges,
+        ingredient_disease_edges,
+        is_a_edges,
+        p_symptom_edges,
+        treats_edges,
+    )
+
+    pairs = reduced.filter(F.col("kind") != "contains").select(
+        "kind", "subj", "obj"
+    )
+
+    pred_map = F.create_map(
+        *[F.lit(x) for k in _PLAIN_KINDS for x in (k, PRED_OF_KIND[k])]
+    )
+    plain = pairs.filter(F.col("kind").isin(*_PLAIN_KINDS)).select(
+        "subj",
+        pred_map[F.col("kind")].alias("pred"),
+        "obj",
+        F.lit(None).cast("double").alias("weight"),
+    )
+
+    parts = [
+        _lab(contains_edges(reduced), PRED_OF_KIND["contains"], weight=True),
+        _lab(p_symptom_edges(pairs), PRED_OF_KIND["p_symptom"]),
+        _lab(treats_edges(pairs), PRED_OF_KIND["treats"]),
+        plain,
+    ]
+    # algebra families: only the FILTERED/derived outputs get arms; their
+    # plain pass-through siblings (bind, gg_reg/gg_cov, dg_up/dg_down)
+    # already shipped in the bulk arm above
+    up_f, down_f, assoc_f, _bind = gene_edges(pairs)
+    it_f, ii_f, ic_f = ingredient_disease_edges(pairs)
+    _gr, _gc, ga_f = gene_gene_edges(pairs)
+    _du, _dd, da_f = disease_gene_edges(pairs)
+    parts += [
+        _lab(up_f, PRED_OF_KIND["up_gene"]),
+        _lab(down_f, PRED_OF_KIND["down_gene"]),
+        _lab(assoc_f, PRED_OF_KIND["assoc_gene"]),
+        _lab(it_f, PRED_OF_KIND["i_treat"]),
+        _lab(ii_f, PRED_OF_KIND["i_induce"]),
+        _lab(ic_f, PRED_OF_KIND["i_contra"]),
+        _lab(ga_f, PRED_OF_KIND["gg_assoc"]),
+        _lab(da_f, PRED_OF_KIND["dg_assoc"]),
+    ]
+    # is_a feeds both its own predicate and the disease-resemble kill set
+    isa_f = is_a_edges(pairs)
+    parts += [
+        _lab(isa_f, PRED_OF_KIND["is_a"]),
+        _lab(disease_resemble_edges(pairs, isa_f), PRED_OF_KIND["dis_resemble"]),
+        _lab(_collapse_mutual(_pairs(pairs, "ing_resemble")),
+            PRED_OF_KIND["ing_resemble"]),
+        _lab(_collapse_mutual(_pairs(pairs, "ing_interact")),
+            PRED_OF_KIND["ing_interact"]),
+    ]
+    # balanced union tree: analyzer cost grows with tree DEPTH × size, so
+    # pairing arms (depth log n) beats the left-deep chain (depth n)
+    while len(parts) > 1:
+        parts = [
+            parts[i].unionByName(parts[i + 1]) if i + 1 < len(parts) else parts[i]
+            for i in range(0, len(parts), 2)
+        ]
+    return parts[0]
+
+
 def test_triples_grouped_matches_joins(spark, pipeline, transcripts_df):
     """r6 grouped algebra fold: _assemble_grouped (one orientation-tagged
     collect_set aggregation + row-local boolean emission) must publish
@@ -802,11 +885,7 @@ def test_triples_grouped_matches_joins(spark, pipeline, transcripts_df):
     pair frame exercising every swap/conflict rule at once."""
     from pyspark.sql import functions as F
 
-    from tcmkg.pipeline.triples import (
-        _assemble_grouped,
-        _assemble_joins,
-        reduce_mentions,
-    )
+    from tcmkg.pipeline.triples import _assemble_grouped, reduce_mentions
 
     reduced = reduce_mentions(pipeline.mentions(transcripts_df)).localCheckpoint()
     a = _assemble_joins(reduced)
